@@ -513,7 +513,7 @@ object Main {
           }
         } catch {
           case e: DbtBuild.DbtUnavailable =>
-            log(a, s"WARNING: ${e.message} — falling back to the native model runner")
+            warn(a, s"WARNING: ${e.message} — falling back to the native model runner")
             buildModelNative(spark, worktree, a.model, a.vars)
         }
       case _ => buildModelNative(spark, worktree, a.model, a.vars)
@@ -535,27 +535,36 @@ object Main {
     (base.join(parts, Seq(pc), "left_semi"), head.join(parts, Seq(pc), "left_semi"))
   }
 
-  /** Hot-key diagnostic for keyed diffs ([[graft.engine.SkewTools.skewReport]]
-    * run on both snapshot sides): when one key value holds more than
-    * `shareX10000` basis points (default 20%) of a side's rows AND that
-    * side is big enough for skew to matter (`minRows`), return a warning
-    * naming the value, its share, and the mitigation recipe. Cost: one
-    * key-column aggregate per side — the scan is column-pruned to the keys
-    * and the shuffle carries only distinct keys, the same price class as
-    * the null-key diagnostic. NULL keys count as their own group (the
-    * classic silent skew), matching skewReport semantics. */
+  /** Hot-key diagnostic for keyed diffs (the top-1 of
+    * [[graft.engine.SkewTools.skewReport]] on both sides): when one key
+    * value holds more than `shareX10000` basis points (default 20%) of a
+    * side's rows AND at least `minRows` rows (skew is a scale problem),
+    * return a warning naming the value, its share, and the mitigation
+    * recipe. Cost: ONE read per side — a `groupBy` on the key columns
+    * themselves (a snapshot bucketed on the keys groups without an
+    * exchange), folded into the side's row total and its hottest key. The
+    * hottest key is `min((-n, keys))`: the largest group, ties to the
+    * smallest key with NULLs first — skewReport's order. NULL keys count as
+    * their own group (the classic silent skew). */
   def skewWarning(base: DataFrame, head: DataFrame, keys: Seq[String],
       shareX10000: Long = 2000, minRows: Long = 1000): Option[String] = {
-    import org.apache.spark.sql.functions.{col, struct}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, count, lit, min, struct, sum}
     if (keys.isEmpty) None
     else {
       def hot(df: DataFrame, side: String): Option[String] = {
-        val keyed = df.withColumn("__diff_key",
-          if (keys.length == 1) col(keys.head) else struct(keys.map(col): _*))
-        graft.engine.SkewTools.skewReport(keyed, "__diff_key", 1).collect().headOption
-          .filter(r => r.getLong(2) >= shareX10000 && r.getLong(1) >= minRows)
-          .map(r => s"$side key ${String.valueOf(r.get(0))} holds ${r.getLong(1)} rows " +
-            s"(${r.getLong(2) / 100}% of the side)")
+        val r = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+          .agg(sum("__n"), min(struct(-col("__n") +: keys.map(col): _*)))
+          .head()
+        if (r.isNullAt(0)) None // empty side
+        else {
+          val top = r.getStruct(1)
+          val n = -top.getLong(0)
+          val share = n * 10000 / r.getLong(0)
+          val key = if (keys.length == 1) top.get(1) else Row.fromSeq(top.toSeq.tail)
+          Option.when(share >= shareX10000 && n >= minRows)(
+            s"$side key ${String.valueOf(key)} holds $n rows (${share / 100}% of the side)")
+        }
       }
       val hits = hot(base, "base") ++ hot(head, "head")
       if (hits.isEmpty) None
@@ -578,81 +587,122 @@ object Main {
     if (bucket && keys.nonEmpty) store.snapshotBucketed(df, table, keys, buckets)
     else store.snapshot(df, table)
 
-  def runDiff(spark: SparkSession, a: Args,
-      jdbc: Option[Profiles.ConnInfo] = None): DiffResult = {
-    val repoRoot = git(a.projectDir, "rev-parse", "--show-toplevel")
-    val runId = SnapshotStore.sanitize(s"${a.model}_${a.baseRef}_${a.headRef}_${System.currentTimeMillis()}")
-    val tmp = Files.createTempDirectory("graft_diff_").toString
-    val store = new SnapshotStore(spark, tmp, runId)
-    val baseWt = s"$tmp/wt_base"
-    val headWt = s"$tmp/wt_head"
+  /** Where every diff warning goes: stdout in rich mode, stderr for json
+    * and markdown so machine stdout stays the report alone (cli.py:134). */
+  private def warn(a: Args, msg: String): Unit =
+    if (a.format == "rich") println(msg) else Console.err.println(msg)
+
+  /** `--keys` must name a column of each side, matched under the session's
+    * `spark.sql.caseSensitive`. Checked on the schema alone (no Spark job),
+    * so a typo fails with the side and the nearest column names instead of
+    * an analysis error from deep inside the diff. */
+  private def requireKeys(df: DataFrame, side: String, keys: Seq[String]): Unit = {
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    keys.find(k => !df.columns.exists(resolver(_, k))).foreach { k =>
+      val dist = org.apache.commons.text.similarity.LevenshteinDistance.getDefaultInstance
+      val nearest = df.columns.sortBy(c => dist(k.toLowerCase, c.toLowerCase).intValue).take(3)
+      throw new IllegalArgumentException(
+        s"--keys column '$k' is not in the $side side; nearest columns: ${nearest.mkString(", ")}")
+    }
+  }
+
+  /** The compare stage every diff driver ends in (the reference
+    * lifecycle's step 5, diff_flow.py:124-262). `side(name, ref)` produces
+    * one side — a worktree build, a path or catalog load, a JDBC read —
+    * and each side's keys are checked before anything runs on it. With a
+    * `runId` each side is first copied into a run-scoped snapshot store
+    * (bucketed on the keys by default), one side at a time: in dbt mode
+    * both builds materialize the SAME warehouse relation, so base must be
+    * copied out before head builds. Then, in order: the null-key and
+    * hot-key warnings (read before a hot duplicated key multiplies the
+    * join), `--scope-partition`, the diff, `--drift`/`--drift-numeric`,
+    * and the snapshot namespace in meta (diff_flow.py:87-88). The store is
+    * dropped afterwards unless `--keep-snapshots` (diff_flow.py:271-275). */
+  private def compare(spark: SparkSession, a: Args, refs: (String, String),
+      runId: Option[String])(side: (String, String) => DataFrame): DiffResult = {
+    val store = runId.map(new SnapshotStore(spark, Files.createTempDirectory("graft_diff_").toString, _))
+    val tables = (s"${a.model}__base", s"${a.model}__head")
+    def prepare(name: String, ref: String, table: String): DataFrame = {
+      val df = side(name, ref)
+      requireKeys(df, name, a.keys)
+      store.fold(df)(snapshotForDiff(_, df, table, a.keys, a.bucketSnapshots))
+    }
     try {
-      log(a, s"creating worktrees for ${a.baseRef}..${a.headRef}")
-      git(repoRoot, "worktree", "add", "--detach", baseWt, a.baseRef)
-      git(repoRoot, "worktree", "add", "--detach", headWt, a.headRef)
-      val projRel = Paths.get(repoRoot).relativize(Paths.get(a.projectDir).toAbsolutePath.normalize).toString
-      // build-then-snapshot one side at a time (reference order AND
-      // per-side progress lines, diff_flow.py:107-122): in dbt mode both
-      // builds materialize the SAME warehouse relation, so base must be
-      // copied out before head builds
-      log(a, s"build (base: ${a.baseRef})")
-      val baseSnap = snapshotForDiff(store,
-        buildModelAt(spark, Paths.get(baseWt, projRel).toString, a, jdbc), s"${a.model}__base",
-        a.keys, a.bucketSnapshots)
-      log(a, s"build (head: ${a.headRef})")
-      val headSnap = snapshotForDiff(store,
-        buildModelAt(spark, Paths.get(headWt, projRel).toString, a, jdbc), s"${a.model}__head",
-        a.keys, a.bucketSnapshots)
-      log(a, "comparing snapshots")
+      val base = prepare("base", refs._1, tables._1)
+      val head = prepare("head", refs._2, tables._2)
+      if (store.isDefined) log(a, "comparing snapshots")
       if (a.keys.nonEmpty) {
-        val (bn, hn) = DiffEngine.nullKeyCounts(baseSnap, headSnap, a.keys)
+        val (bn, hn) = DiffEngine.nullKeyCounts(base, head, a.keys)
         if (bn + hn > 0)
-          log(a, s"WARNING: null key values (base=$bn head=$hn rows) — these rows can never match and inflate added/removed")
-        skewWarning(baseSnap, headSnap, a.keys).foreach(w => log(a, w))
+          warn(a, s"WARNING: null key values (base=$bn head=$hn rows) — these rows can never match and inflate added/removed")
+        skewWarning(base, head, a.keys).foreach(warn(a, _))
       }
-      val (baseIn, headIn) = a.scopePartition match {
-        case Some(pc) =>
-          log(a, s"scoping to partitions of '$pc' whose fingerprint changed")
-          scopeByChangedPartitions(spark, baseSnap, headSnap, pc)
-        case None => (baseSnap, headSnap)
+      val (b, h) = a.scopePartition.fold((base, head)) { pc =>
+        log(a, s"scoping to partitions of '$pc' whose fingerprint changed")
+        scopeByChangedPartitions(spark, base, head, pc)
       }
-      val res = DiffEngine.diff(baseIn, headIn, a.keys, a.where, a.sample,
+      val res = DiffEngine.diff(b, h, a.keys, a.where, a.sample,
         approxDistinct = a.approxDistinct, computeProfiles = a.colStats, computeByColumn = a.byColumn,
-        model = a.model, baseRef = a.baseRef, headRef = a.headRef,
+        model = a.model, baseRef = refs._1, headRef = refs._2,
         saltSkewBuckets = a.saltSkew)
-      // record the ACTUAL snapshot namespace/tables in meta (diff_flow.py:87-88)
       res.copy(
-        meta = res.meta.copy(
-          diffSchema = Some("dbt_model_diff__" + SnapshotStore.sanitize(runId)),
-          tables = Some((
-            SnapshotStore.sanitize(s"${a.model}__base"),
-            SnapshotStore.sanitize(s"${a.model}__head")))),
-        drift = computeDrift(baseIn, headIn, a.driftCols, a.where),
-        driftNumeric = computeNumericDrift(baseIn, headIn, a.driftNumericCols, a.where))
-    } finally {
-      try git(repoRoot, "worktree", "remove", "--force", baseWt) catch { case _: Throwable => }
-      try git(repoRoot, "worktree", "remove", "--force", headWt) catch { case _: Throwable => }
-      if (!a.keepSnapshots) {
-        // bucketed snapshots also carry catalog entries (DROP IF EXISTS —
-        // no-op for plain parquet snapshots)
-        store.dropTable(s"${a.model}__base")
-        store.dropTable(s"${a.model}__head")
-        store.drop()
-      }
-      else {
+        meta = runId.fold(res.meta)(id => res.meta.copy(
+          diffSchema = Some("dbt_model_diff__" + SnapshotStore.sanitize(id)),
+          tables = Some((SnapshotStore.sanitize(tables._1), SnapshotStore.sanitize(tables._2))))),
+        drift = computeDrift(b, h, a.driftCols, a.where),
+        driftNumeric = computeNumericDrift(b, h, a.driftNumericCols, a.where))
+    } finally store.foreach { s =>
+      if (a.keepSnapshots)
         // the JSON meta records only logical names; without the physical
         // path, kept snapshots are unfindable in an unannounced temp dir
-        // (the reference's kept schema is findable in the warehouse by its
-        // printed name — diff_flow.py:68-71,271-275)
-        val msg = s"snapshots kept at $tmp (tables ${a.model}__base / ${a.model}__head)"
-        if (a.format == "rich") println(msg) else Console.err.println(msg) // machine formats keep stdout clean
+        warn(a, s"snapshots kept at ${s.runDir} (tables ${tables._1} / ${tables._2})")
+      else {
+        // bucketed snapshots also carry catalog entries (DROP IF EXISTS —
+        // no-op for plain parquet snapshots)
+        s.dropTable(tables._1)
+        s.dropTable(tables._2)
+        s.drop()
       }
     }
   }
 
+  def runDiff(spark: SparkSession, a: Args,
+      jdbc: Option[Profiles.ConnInfo] = None): DiffResult = {
+    val repoRoot = git(a.projectDir, "rev-parse", "--show-toplevel")
+    val runId = SnapshotStore.sanitize(s"${a.model}_${a.baseRef}_${a.headRef}_${System.currentTimeMillis()}")
+    val wtDir = Files.createTempDirectory("graft_wt_").toString
+    val worktree = Map("base" -> s"$wtDir/wt_base", "head" -> s"$wtDir/wt_head")
+    try {
+      log(a, s"creating worktrees for ${a.baseRef}..${a.headRef}")
+      git(repoRoot, "worktree", "add", "--detach", worktree("base"), a.baseRef)
+      git(repoRoot, "worktree", "add", "--detach", worktree("head"), a.headRef)
+      val projRel = Paths.get(repoRoot).relativize(Paths.get(a.projectDir).toAbsolutePath.normalize).toString
+      compare(spark, a, (a.baseRef, a.headRef), Some(runId)) { (side, ref) =>
+        log(a, s"build ($side: $ref)")
+        buildModelAt(spark, Paths.get(worktree(side), projRel).toString, a, jdbc)
+      }
+    } finally worktree.values.foreach { wt =>
+      try git(repoRoot, "worktree", "remove", "--force", wt) catch { case _: Throwable => }
+    }
+  }
+
+  /** diff-tables over paths or catalog tables; with a postgres / redshift /
+    * jdbc profile target, over a live warehouse — the reference's
+    * deployment mode. Warehouse relations are read over JDBC (`--where`
+    * pushed into the remote scan, `--jdbc-partition-col` splitting the
+    * transfer into parallel bounded queries), then snapshotted to Parquet
+    * (the CTAS-copy isolation step, adapters/postgres.py:37-44) so every
+    * comparison pass runs on an immutable columnar copy instead of
+    * re-querying the live warehouse. `--where` is re-applied to the
+    * snapshots inside diff(): a no-op on rows that keeps one code path. */
   def runDiffTables(spark: SparkSession, a: Args,
       jdbc: Option[Profiles.ConnInfo] = None): DiffResult = jdbc match {
-    case Some(conn) => runDiffJdbc(spark, a, conn)
+    case Some(conn) =>
+      val runId = SnapshotStore.sanitize(s"${a.model}_${System.currentTimeMillis()}")
+      compare(spark, a, (a.basePath, a.headPath), Some(runId)) { (_, rel) =>
+        JdbcSource.read(spark, conn, rel, a.where,
+          a.jdbcPartitionCol, a.jdbcPartitions, redshiftCompat = a.redshiftCompat)
+      }
     case None =>
       // path inputs read as parquet/orc/csv/jsonl (--in-format, or sniffed
       // from the path's or its first data file's extension); anything not a
@@ -686,27 +736,9 @@ object Main {
             case _ => spark.read.parquet(p)
           }
         }
-      val (b0, h0) = (load(a.basePath), load(a.headPath))
-      val (base, head) = a.scopePartition match {
-        case Some(pc) => scopeByChangedPartitions(spark, b0, h0, pc)
-        case None => (b0, h0)
-      }
-      skewWarning(base, head, a.keys).foreach(Console.err.println)
-      DiffEngine.diff(base, head, a.keys, a.where, a.sample,
-        approxDistinct = a.approxDistinct, computeProfiles = a.colStats, computeByColumn = a.byColumn,
-        model = a.model, baseRef = a.basePath, headRef = a.headPath,
-        saltSkewBuckets = a.saltSkew)
-        .copy(drift = computeDrift(base, head, a.driftCols, a.where),
-          driftNumeric = computeNumericDrift(base, head, a.driftNumericCols, a.where))
+      compare(spark, a, (a.basePath, a.headPath), None)((_, p) => load(p))
   }
 
-  /** diff-tables over a live warehouse (profiles.yml `type: postgres` /
-    * `redshift` / `jdbc`): the reference's deployment mode. Both relations
-    * are read over JDBC — `--where` pushed into the remote scan,
-    * `--jdbc-partition-col` splitting the transfer into parallel bounded
-    * queries — then snapshotted to Parquet (the CTAS-copy isolation step,
-    * adapters/postgres.py:37-44) so every comparison pass runs on an
-    * immutable columnar copy instead of re-querying the live warehouse. */
   /** One-row run-history record for `--publish-jdbc`: the numbers a
     * warehouse dashboard trends per model per run. Missing row-diff
     * sections (STATS_ONLY runs) publish as -1, not NULL — BI-side
@@ -723,44 +755,6 @@ object Main {
       java.time.Instant.now().toString
     )).toDF("model", "base_ref", "head_ref", "base_rows", "head_rows",
       "added", "removed", "changed", "keys_not_unique", "published_at")
-  }
-
-  private def runDiffJdbc(spark: SparkSession, a: Args, conn: Profiles.ConnInfo): DiffResult = {
-    val runId = SnapshotStore.sanitize(s"${a.model}_${System.currentTimeMillis()}")
-    val tmp = Files.createTempDirectory("graft_jdbc_").toString
-    val store = new SnapshotStore(spark, tmp, runId)
-    try {
-      def snap(rel: String, side: String): DataFrame = {
-        val df = JdbcSource.read(spark, conn, rel, a.where,
-          a.jdbcPartitionCol, a.jdbcPartitions, redshiftCompat = a.redshiftCompat)
-        snapshotForDiff(store, df, s"${a.model}__$side", a.keys, a.bucketSnapshots)
-      }
-      val (b0, h0) = (snap(a.basePath, "base"), snap(a.headPath, "head"))
-      val (base, head) = a.scopePartition match {
-        case Some(pc) => scopeByChangedPartitions(spark, b0, h0, pc)
-        case None => (b0, h0)
-      }
-      skewWarning(base, head, a.keys).foreach(Console.err.println)
-      // `--where` already constrained the JDBC scans; re-applying it to the
-      // snapshots inside diff() is a no-op on rows and keeps one code path
-      val res = DiffEngine.diff(base, head, a.keys, a.where, a.sample,
-        approxDistinct = a.approxDistinct, computeProfiles = a.colStats, computeByColumn = a.byColumn,
-        model = a.model, baseRef = a.basePath, headRef = a.headPath,
-        saltSkewBuckets = a.saltSkew)
-        .copy(drift = computeDrift(base, head, a.driftCols, a.where),
-          driftNumeric = computeNumericDrift(base, head, a.driftNumericCols, a.where))
-      res.copy(meta = res.meta.copy(
-        diffSchema = Some("dbt_model_diff__" + SnapshotStore.sanitize(runId)),
-        tables = Some((
-          SnapshotStore.sanitize(s"${a.model}__base"),
-          SnapshotStore.sanitize(s"${a.model}__head")))))
-    } finally {
-      if (!a.keepSnapshots) {
-        store.dropTable(s"${a.model}__base")
-        store.dropTable(s"${a.model}__head")
-        store.drop()
-      } else Console.err.println(s"snapshots kept at $tmp (tables ${a.model}__base / ${a.model}__head)")
-    }
   }
 
   /** `curate <in> <out>`: the end-to-end corpus cleanup
@@ -1043,30 +1037,6 @@ object Main {
     case c => c.toString
   } + "\""
 
-  /** `datasheet <inPath>` — the corpus intake review as ONE machine
-    *-readable JSON line (r16, verdict #6): the library's datasheet family
-    * wired to the shell so a pipeline operator can consume it without
-    * writing Scala. Sections:
-    *   - `sources`: per-source dedup savings ([[graft.operators.Dedup.dedupSavings]],
-    *     q358) — present when `--source-col` exists;
-    *   - `cross_source`: content-hash overlap matrix
-    *     ([[graft.operators.Dedup.crossSourceDupMatrix]], q348), same guard;
-    *   - `source_divergence`: per-source distribution divergence
-    *     ([[graft.operators.TextAnalysis.sourceDivergence]], q364), same
-    *     guard — note this leg is a full corpus token explode plus two
-    *     keyed shuffles, the datasheet's second-most-expensive section;
-    *   - `filter_order`: the cascade-ordering advisor
-    *     ([[graft.operators.TextAnalysis.filterOrderAdvisor]], q356) over a
-    *     standard four-gate cascade (length cap 1 / min-tokens 5 /
-    *     stopword presence 10 / entropy 50 cost units);
-    *   - `lsh_recall`: the measured LSH-vs-exact recall certificate
-    *     ([[graft.operators.Dedup.lshRecallCertificate]], q350) at
-    *     `--near-dup-pct`, under the SAME threshold-derived banding the
-    *     curate LSH leg would run (q360). The exact-join truth side makes
-    *     this the datasheet's expensive row — on a 100 TB corpus run it
-    *     on a sample, exactly like the operator's scaladoc prescribes.
-    * Every collect here is bounded: #sources, #source-pairs, 4 gates,
-    * one certificate row. */
   /** `ann-maintain <baseVecs> <batchVecs> <outDir> [--id-col c --vec-col c
     * --nlist N --kmeans-iters I --drift-x1m D --probe-id P --k K
     * --nprobe NP]` — the nightly index-maintenance operator from the shell
@@ -1101,6 +1071,12 @@ object Main {
       s""""recall_after_x100": ${r.getAs[Long]("recall_after_x100")}, "out": ${jsonStr(a.outPath)}}""")
   }
 
+  /** budget·tempBp/10⁴ via BigInt (the mixtureThresholds idiom): the Long
+    * product overflows silently past ~9.2e14 budget tokens at tempBp up to
+    * 10⁴, printing a negative target into the plan JSON (r17 ADVICE). */
+  private[graft] def tokenTarget(budgetTokens: Long, tempBp: Long): Long =
+    (BigInt(budgetTokens) * tempBp / 10000).toLong
+
   /** `mixture-plan <docsPath> [--domain-col c --text-col c --budget-docs N
     * --budget-tokens N]` — the plan the mixture family ACTS on, from the
     * shell (r17b): per domain, raw and √-temperature shares in exact bp,
@@ -1111,12 +1087,6 @@ object Main {
     * the domain's actual token mass. Pure metadata: two bounded
     * aggregates (domain cardinality contract), one JSON line — run it
     * BEFORE the materialization to review the mixture a budget implies. */
-  /** budget·tempBp/10⁴ via BigInt (the mixtureThresholds idiom): the Long
-    * product overflows silently past ~9.2e14 budget tokens at tempBp up to
-    * 10⁴, printing a negative target into the plan JSON (r17 ADVICE). */
-  private[graft] def tokenTarget(budgetTokens: Long, tempBp: Long): Long =
-    (BigInt(budgetTokens) * tempBp / 10000).toLong
-
   def runMixturePlan(spark: SparkSession, a: Args): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.Sampling
@@ -1423,6 +1393,30 @@ object Main {
       s""""n_clusters": $nClusters, "out": ${jsonStr(a.outPath)}}""")
   }
 
+  /** `datasheet <inPath>` — the corpus intake review as ONE machine
+    *-readable JSON line (r16, verdict #6): the library's datasheet family
+    * wired to the shell so a pipeline operator can consume it without
+    * writing Scala. Sections:
+    *   - `sources`: per-source dedup savings ([[graft.operators.Dedup.dedupSavings]],
+    *     q358) — present when `--source-col` exists;
+    *   - `cross_source`: content-hash overlap matrix
+    *     ([[graft.operators.Dedup.crossSourceDupMatrix]], q348), same guard;
+    *   - `source_divergence`: per-source distribution divergence
+    *     ([[graft.operators.TextAnalysis.sourceDivergence]], q364), same
+    *     guard — note this leg is a full corpus token explode plus two
+    *     keyed shuffles, the datasheet's second-most-expensive section;
+    *   - `filter_order`: the cascade-ordering advisor
+    *     ([[graft.operators.TextAnalysis.filterOrderAdvisor]], q356) over a
+    *     standard four-gate cascade (length cap 1 / min-tokens 5 /
+    *     stopword presence 10 / entropy 50 cost units);
+    *   - `lsh_recall`: the measured LSH-vs-exact recall certificate
+    *     ([[graft.operators.Dedup.lshRecallCertificate]], q350) at
+    *     `--near-dup-pct`, under the SAME threshold-derived banding the
+    *     curate LSH leg would run (q360). The exact-join truth side makes
+    *     this the datasheet's expensive row — on a 100 TB corpus run it
+    *     on a sample, exactly like the operator's scaladoc prescribes.
+    * Every collect here is bounded: #sources, #source-pairs, 4 gates,
+    * one certificate row. */
   def runDatasheet(spark: SparkSession, a: Args): Unit = {
     import org.apache.spark.sql.functions._
     import graft.operators.{Dedup, TextAnalysis}
@@ -1776,7 +1770,7 @@ object Main {
       // added/removed/changed counts and sample come from a join-multiplied
       // frame (rowcounts already fell back to exact counts in DiffEngine)
       if (result.rowDiff.exists(_.keysNotUnique))
-        Console.err.println(
+        warn(a,
           s"WARNING: key columns (${result.meta.keys.mkString(", ")}) are not unique — " +
             "added/removed/changed and sample_keys are join-multiplied and may over-count")
       // the rendered report is the primary output — print it BEFORE the

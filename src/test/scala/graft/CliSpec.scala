@@ -896,6 +896,63 @@ class CliSpec extends SparkTestBase {
     assert(r.rowDiff.get.added == 1 && r.rowDiff.get.removed == 0 && r.rowDiff.get.changed == 0)
   }
 
+  test("diff-tables: a key missing from one side fails before any job, naming the side") {
+    import spark.implicits._
+    // catalog tables: their schema comes from the catalog, where a parquet
+    // path's inference would itself run a job
+    Seq((1L, "a")).toDF("customer_id", "name").write.mode("overwrite").saveAsTable("graft_badkey_base")
+    Seq((1L, "a")).toDF("cust_id", "name").write.mode("overwrite").saveAsTable("graft_badkey_head")
+    // job starts by job group; the bus delivers in order, so once a later
+    // sentinel job's start arrives, every job the diff started has too
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    val a = Main.parseArgs(Seq("diff-tables", "graft_badkey_base", "graft_badkey_head",
+      "--keys", "customer_id"))
+    sc.addSparkListener(listener)
+    val e = try {
+      sc.setJobGroup("graft_badkey", "bad key")
+      intercept[IllegalArgumentException](Main.runDiffTables(spark, a))
+    } finally {
+      sc.setJobGroup("graft_badkey_sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime + 30000000000L
+      while (!groups.contains("graft_badkey_sentinel") && System.nanoTime < deadline) Thread.sleep(10)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      Seq("base", "head").foreach(s => spark.sql(s"DROP TABLE IF EXISTS graft_badkey_$s"))
+    }
+    assert(e.getMessage.contains("'customer_id' is not in the head side"), e.getMessage)
+    assert(e.getMessage.contains("nearest columns: cust_id, name"), e.getMessage)
+    assert(groups.contains("graft_badkey_sentinel"))
+    assert(!groups.contains("graft_badkey"), "a Spark job ran before the key check")
+  }
+
+  test("diff-tables --format json: null-key warning on stderr, stdout is the report alone") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_nullkey_")
+    Seq((Some(1L), "a"), (None, "b")).toDF("k", "v").write.parquet(s"$dir/base")
+    Seq((Some(1L), "a"), (Some(2L), "c")).toDF("k", "v").write.parquet(s"$dir/head")
+    val a = Main.parseArgs(Seq("diff-tables", s"$dir/base", s"$dir/head",
+      "--keys", "k", "--format", "json"))
+    val (out, err) = (new java.io.ByteArrayOutputStream(), new java.io.ByteArrayOutputStream())
+    val r = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      Console.withErr(new java.io.PrintStream(err, true, "UTF-8")) {
+        val r = Main.runDiffTables(spark, a)
+        println(Main.render(r, a.format))
+        r
+      }
+    }
+    val stdout = out.toString("UTF-8")
+    assert(stdout.trim == Main.render(r, "json"), stdout)
+    assert(org.json4s.jackson.JsonMethods.parse(stdout) != org.json4s.JNothing)
+    assert(err.toString("UTF-8").contains("WARNING: null key values (base=1 head=0 rows)"),
+      err.toString("UTF-8"))
+  }
+
   test("diff-tables reads orc/csv/jsonl sources (sniffed and forced), same diff result") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_fmt_")
@@ -1285,7 +1342,17 @@ class CliSpec extends SparkTestBase {
     val nulls = ((1 to 1500).map(_ => (null.asInstanceOf[java.lang.Long], 1L)) ++
       (1 to 500).map(i => (java.lang.Long.valueOf(i.toLong), 1L))).toDF("custkey", "v")
     val wn = Main.skewWarning(nulls, head, Seq("custkey", "v"))
-    assert(wn.isDefined && wn.get.contains("base key"))
+    assert(wn.exists(_.contains("base key [null,1] holds 1500 rows (75% of the side)")), wn)
+    // a tie between two equally hot keys names the smaller one
+    // (skewReport's order: count desc, then key asc nulls first)
+    val tie = ((1 to 1000).map(i => (77L, i.toLong)) ++ (1 to 1000).map(i => (7L, i.toLong)) ++
+      (1 to 500).map(i => (i.toLong + 100000, i.toLong))).toDF("custkey", "v")
+    val wt = Main.skewWarning(tie, head, Seq("custkey"))
+    assert(wt.exists(_.contains("base key 7 holds 1000 rows (40% of the side)")), wt)
+    val nullTie = ((1 to 1000).map(_ => (null.asInstanceOf[java.lang.Long], 1L)) ++
+      (1 to 1000).map(_ => (java.lang.Long.valueOf(3L), 1L))).toDF("custkey", "v")
+    assert(Main.skewWarning(nullTie, head, Seq("custkey"))
+      .exists(_.contains("base key null holds 1000 rows")))
     assert(Main.skewWarning(base, head, Nil).isEmpty) // STATS_ONLY: no keys, no scan
   }
 
