@@ -553,8 +553,8 @@ object Main {
     if (keys.isEmpty) None
     else {
       def hot(df: DataFrame, side: String): Option[String] = {
-        val r = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-          .agg(sum("__n"), min(struct(-col("__n") +: keys.map(col): _*)))
+        val r = df.groupBy(keys.map(DiffEngine.ident): _*).agg(count(lit(1)).as("__n"))
+          .agg(sum("__n"), min(struct(-col("__n") +: keys.map(DiffEngine.ident): _*)))
           .head()
         if (r.isNullAt(0)) None // empty side
         else {
@@ -592,44 +592,44 @@ object Main {
   private def warn(a: Args, msg: String): Unit =
     if (a.format == "rich") println(msg) else Console.err.println(msg)
 
-  /** `--keys` must name a column of each side, matched under the session's
-    * `spark.sql.caseSensitive`. Checked on the schema alone (no Spark job),
-    * so a typo fails with the side and the nearest column names instead of
-    * an analysis error from deep inside the diff. */
-  private def requireKeys(df: DataFrame, side: String, keys: Seq[String]): Unit = {
-    val resolver = df.sparkSession.sessionState.conf.resolver
-    keys.find(k => !df.columns.exists(resolver(_, k))).foreach { k =>
-      val dist = org.apache.commons.text.similarity.LevenshteinDistance.getDefaultInstance
-      val nearest = df.columns.sortBy(c => dist(k.toLowerCase, c.toLowerCase).intValue).take(3)
-      throw new IllegalArgumentException(
-        s"--keys column '$k' is not in the $side side; nearest columns: ${nearest.mkString(", ")}")
-    }
-  }
-
   /** The compare stage every diff driver ends in (the reference
     * lifecycle's step 5, diff_flow.py:124-262). `side(name, ref)` produces
-    * one side — a worktree build, a path or catalog load, a JDBC read —
-    * and each side's keys are checked before anything runs on it. With a
-    * `runId` each side is first copied into a run-scoped snapshot store
-    * (bucketed on the keys by default), one side at a time: in dbt mode
-    * both builds materialize the SAME warehouse relation, so base must be
-    * copied out before head builds. Then, in order: the null-key and
-    * hot-key warnings (read before a hot duplicated key multiplies the
+    * one side — a worktree build, a path or catalog load, a JDBC read — on
+    * the caller thread, and each side's keys are checked
+    * ([[DiffEngine.requireKeys]]) before anything runs on it. With a
+    * `runId` each side is copied into a run-scoped snapshot store (bucketed
+    * on the keys by default). With `concurrentSnapshots` both sides are
+    * built first and the two snapshot writes then run at once
+    * ([[graft.tools.Concurrent.join2]]: the first failure cancels the
+    * other write and is the error raised). Otherwise one side at a time: in
+    * dbt mode both builds materialize the SAME warehouse relation, so base
+    * must be copied out before head builds. Then, in order: the null-key
+    * and hot-key warnings (read before a hot duplicated key multiplies the
     * join), `--scope-partition`, the diff, `--drift`/`--drift-numeric`,
     * and the snapshot namespace in meta (diff_flow.py:87-88). The store is
     * dropped afterwards unless `--keep-snapshots` (diff_flow.py:271-275). */
   private def compare(spark: SparkSession, a: Args, refs: (String, String),
-      runId: Option[String])(side: (String, String) => DataFrame): DiffResult = {
+      runId: Option[String], concurrentSnapshots: Boolean = false)
+      (side: (String, String) => DataFrame): DiffResult = {
     val store = runId.map(new SnapshotStore(spark, Files.createTempDirectory("graft_diff_").toString, _))
     val tables = (s"${a.model}__base", s"${a.model}__head")
-    def prepare(name: String, ref: String, table: String): DataFrame = {
+    def build(name: String, ref: String): DataFrame = {
       val df = side(name, ref)
-      requireKeys(df, name, a.keys)
-      store.fold(df)(snapshotForDiff(_, df, table, a.keys, a.bucketSnapshots))
+      DiffEngine.requireKeys(df, name, a.keys)
+      df
     }
+    def snapshot(df: DataFrame, table: String): DataFrame =
+      store.fold(df)(snapshotForDiff(_, df, table, a.keys, a.bucketSnapshots))
     try {
-      val base = prepare("base", refs._1, tables._1)
-      val head = prepare("head", refs._2, tables._2)
+      val (base, head) =
+        if (concurrentSnapshots) {
+          val (b, h) = (build("base", refs._1), build("head", refs._2))
+          graft.tools.Concurrent.join2(spark, "diff-snapshot")(
+            snapshot(b, tables._1), snapshot(h, tables._2))
+        } else {
+          val b = snapshot(build("base", refs._1), tables._1)
+          (b, snapshot(build("head", refs._2), tables._2))
+        }
       if (store.isDefined) log(a, "comparing snapshots")
       if (a.keys.nonEmpty) {
         val (bn, hn) = DiffEngine.nullKeyCounts(base, head, a.keys)
@@ -677,7 +677,10 @@ object Main {
       git(repoRoot, "worktree", "add", "--detach", worktree("base"), a.baseRef)
       git(repoRoot, "worktree", "add", "--detach", worktree("head"), a.headRef)
       val projRel = Paths.get(repoRoot).relativize(Paths.get(a.projectDir).toAbsolutePath.normalize).toString
-      compare(spark, a, (a.baseRef, a.headRef), Some(runId)) { (side, ref) =>
+      // native builds are lazy frames over each worktree's own files, so
+      // both snapshot writes can run at once; dbt builds share a relation
+      compare(spark, a, (a.baseRef, a.headRef), Some(runId),
+          concurrentSnapshots = a.buildMode != "dbt") { (side, ref) =>
         log(a, s"build ($side: $ref)")
         buildModelAt(spark, Paths.get(worktree(side), projRel).toString, a, jdbc)
       }

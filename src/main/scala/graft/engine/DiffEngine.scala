@@ -27,11 +27,14 @@ import graft.model._
   *   - the row hash is a single codegen'd expression tree
   *     (md5 ∘ concat_ws ∘ coalesce ∘ cast) — stays inside whole-stage
   *     codegen, no UDFs.
-  *   - column profiles run as ONE aggregate pass per side; `exact` mode uses
-  *     `count(distinct c)` per column (N-column Expand — fine at test scale,
-  *     quadratic data blow-up at 100 TB), `approx` mode uses HLL++
-  *     `approx_count_distinct` which keeps the pass at one shuffle with
-  *     constant-size sketches.
+  *   - `exact` column profiles of BOTH sides run as ONE aggregate with no
+  *     Expand ([[profileSidesDf]]): every value melts to a (side, column,
+  *     typed value) row and a single `count(distinct)` per group counts it,
+  *     so the shuffle carries Σ per-column distinct values instead of an
+  *     N-column Expand's N× input rows. `approx` mode keeps one HLL++
+  *     `approx_count_distinct` pass per side (constant-size sketches).
+  *   - column names are taken literally ([[ident]]): a warehouse identifier
+  *     with dots, spaces or backticks is one column, never struct access.
   */
 object DiffEngine {
 
@@ -43,13 +46,33 @@ object DiffEngine {
     * (adapters/postgres.py:100-101 `|| '|' ||`). */
   val HashSep = "|"
 
+  /** A reference to the column named `name`, taken literally: backtick-
+    * quoted (inner backticks doubled) so `first.name` or `order id` resolve
+    * as one column instead of being parsed as struct access. The diff path
+    * builds every column reference it takes from a schema name through here. */
+  def ident(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  /** Every key must name a column of `df`, matched under the session's
+    * `spark.sql.caseSensitive`. Checked on the schema alone (no Spark job),
+    * so a typo fails with the side and the nearest column names instead of
+    * an analysis error from deep inside the diff. */
+  def requireKeys(df: DataFrame, side: String, keys: Seq[String]): Unit = {
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    keys.find(k => !df.columns.exists(resolver(_, k))).foreach { k =>
+      val dist = org.apache.commons.text.similarity.LevenshteinDistance.getDefaultInstance
+      val nearest = df.columns.sortBy(c => dist(k.toLowerCase, c.toLowerCase).intValue).take(3)
+      throw new IllegalArgumentException(
+        s"key column '$k' is not in the $side side; nearest columns: ${nearest.mkString(", ")}")
+    }
+  }
+
   /** md5(concat_ws("|", coalesce(cast(c as string), "<NULL>")…)) over `cols`
     * in the given order (head-table column order per diff_flow.py:181).
     * `concat_ws` skips NULLs, so the coalesce must come first — matching the
     * reference, which coalesces before concatenation. Fully codegen'd. */
   def rowHash(cols: Seq[String]): Column = {
     require(cols.nonEmpty, "row hash needs at least one column")
-    md5(concat_ws(HashSep, cols.map(c => coalesce(col(c).cast(StringType), lit(NullSentinel))): _*))
+    md5(concat_ws(HashSep, cols.map(c => coalesce(ident(c).cast(StringType), lit(NullSentinel))): _*))
   }
 
   /** Order-preserving, name-only column-set diff (diff_flow.py:139-150).
@@ -80,8 +103,8 @@ object DiffEngine {
   def profileExprs(cols: Seq[String], approx: Boolean = false): Seq[Column] =
     cols.flatMap { c =>
       Seq(
-        coalesce(sum(when(col(c).isNull, 1L).otherwise(0L)), lit(0L)).cast("long").as(s"${c}__nulls"),
-        (if (approx) approx_count_distinct(col(c)) else countDistinct(col(c))).cast("long").as(s"${c}__distinct")
+        coalesce(sum(when(ident(c).isNull, 1L).otherwise(0L)), lit(0L)).cast("long").as(s"${c}__nulls"),
+        (if (approx) approx_count_distinct(ident(c)) else countDistinct(ident(c))).cast("long").as(s"${c}__distinct")
       )
     }
 
@@ -163,53 +186,92 @@ object DiffEngine {
     cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
   }
 
-  /** Exact multi-column profile WITHOUT the Expand blow-up: melt the N
-    * columns to (col_idx, value-as-string) rows via posexplode, then ONE
-    * count-distinct per group — Catalyst plans that as a two-phase
-    * (partial-distinct → count) aggregate, so the shuffle carries at most
-    * Σ per-column distinct values instead of Expand's N× input rows. The
-    * 100 TB exact mode when HLL approximation isn't acceptable.
+  /** Exact profiles of several frames (the diff's base and head) in ONE
+    * aggregate WITHOUT the Expand blow-up: every side melts its N columns to
+    * (side, column position, value) rows via posexplode, the melts union,
+    * and ONE `count(distinct value)` per (side, position) group counts
+    * them — Catalyst plans that as a two-phase (partial-distinct → count)
+    * aggregate, so the shuffle carries at most Σ per-column distinct values
+    * instead of Expand's N× input rows, and both sides share its jobs.
     *
-    * String-casting is 1:1 for the profiled types (int/decimal/date/string),
-    * so distinct counts equal the raw-value counts; null survives the cast.
-    * Returns the same single-row shape as [[profileDf]]. */
-  def profileMeltDf(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "need at least one column to profile")
-    val melted = df.select(posexplode(array(
-      cols.map(c => col(c).cast(StringType)): _*)).as(Seq("__pos", "__v")))
-    val byPos = melted.groupBy(col("__pos"))
+    * Values are not cast to string. Each distinct data type among the
+    * profiled columns, over all sides, gets its own slot of one struct;
+    * a value sets only its type's slot, and the struct is NULL when the
+    * value is. Distinct structs are therefore exactly distinct values of
+    * one column's type — the same `count(DISTINCT c)` semantics for every
+    * type, float normalisation of -0.0/NaN in grouping keys included, and
+    * a column whose type drifted between sides counts each side in its own
+    * type.
+    *
+    * One row per (side, position) of a non-empty side: `__side` and
+    * `__pos` (indices into `sides` and `cols`), `__n` (the side's row
+    * count), `__nulls`, `__distinct`. */
+  def profileSidesDf(sides: Seq[DataFrame], cols: Seq[String]): DataFrame = {
+    require(sides.nonEmpty && cols.nonEmpty, "need at least one side and one column to profile")
+    val types = sides.flatMap(df => cols.map(df.schema(_).dataType)).distinct
+    def typed(df: DataFrame, c: String): Column = {
+      val slot = types.indexOf(df.schema(c).dataType)
+      when(ident(c).isNotNull, struct(types.indices.map { i =>
+        (if (i == slot) ident(c) else lit(null).cast(types(i))).as(s"t$i")
+      }: _*))
+    }
+    sides.zipWithIndex.map { case (df, s) =>
+      df.select(lit(s).as("__side"),
+        posexplode(array(cols.map(typed(df, _)): _*)).as(Seq("__pos", "__v")))
+    }.reduce(_ union _)
+      .groupBy(col("__side"), col("__pos"))
       .agg(
-        sum(when(col("__v").isNull, 1L).otherwise(0L)).cast("long").as("__nulls"),
-        countDistinct(col("__v")).cast("long").as("__distinct"))
-    // Pivot the ≤N per-column rows into the single profile row with a second
-    // (single-partition, N-input-row) aggregate — one job end to end, no
-    // driver collect + createDataFrame round-trip. Empty input degrades to
-    // all-zero counts via the coalesce.
+        count(lit(1)).as("__n"),
+        (count(lit(1)) - count(col("__v"))).as("__nulls"),
+        countDistinct(col("__v")).as("__distinct"))
+  }
+
+  /** [[profileSidesDf]] collected: per side, in order, its row count and
+    * each column's (null count, distinct count). An empty side reads as
+    * zero rows with all-zero profiles. */
+  def profileSides(sides: Seq[DataFrame], cols: Seq[String]): Seq[(Long, Map[String, (Long, Long)])] = {
+    val got = profileSidesDf(sides, cols).collect().map { r =>
+      (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3), r.getLong(4))
+    }.toMap
+    sides.indices.map { s =>
+      val n = got.get((s, 0)).fold(0L)(_._1)
+      n -> cols.zipWithIndex.map { case (c, i) =>
+        c -> got.get((s, i)).fold((0L, 0L))(v => (v._2, v._3))
+      }.toMap
+    }
+  }
+
+  /** The single-side form of [[profileSidesDf]], pivoted to [[profileDf]]'s
+    * single-row shape (`<col>__nulls`, `<col>__distinct` per column) by a
+    * second, N-input-row aggregate — one job end to end, no driver collect.
+    * Empty input degrades to all-zero counts via the coalesce. The 100 TB
+    * exact mode when HLL approximation isn't acceptable. */
+  def profileMeltDf(df: DataFrame, cols: Seq[String]): DataFrame = {
     val pivots = cols.zipWithIndex.flatMap { case (c, i) =>
       Seq(
         coalesce(max(when(col("__pos") === i, col("__nulls"))), lit(0L)).as(s"${c}__nulls"),
         coalesce(max(when(col("__pos") === i, col("__distinct"))), lit(0L)).as(s"${c}__distinct"))
     }
-    byPos.agg(pivots.head, pivots.tail: _*)
+    profileSidesDf(Seq(df), cols).agg(pivots.head, pivots.tail: _*)
   }
 
   /** Head rows with no base key match — true anti join (reference idiom is
     * `LEFT JOIN … WHERE base.k IS NULL`, diff_flow.py:189-197; left_anti is
     * the null-safe, single-shuffle Spark form). */
   def added(base: DataFrame, head: DataFrame, keys: Seq[String]): DataFrame =
-    head.join(base.select(keys.map(col): _*), keys, "left_anti")
+    head.join(base.select(keys.map(ident): _*), keys, "left_anti")
 
   /** Base rows with no head key match (diff_flow.py:198-205). */
   def removed(base: DataFrame, head: DataFrame, keys: Seq[String]): DataFrame =
-    base.join(head.select(keys.map(col): _*), keys, "left_anti")
+    base.join(head.select(keys.map(ident): _*), keys, "left_anti")
 
   /** Key-matched rows whose non-key hash differs (diff_flow.py:207-225).
     * Both sides are projected to keys + hash BEFORE the join (column pruning
     * the reference gets from its hash CTEs), so the shuffle carries only
     * keys + 32-byte hash regardless of table width. */
   def changed(base: DataFrame, head: DataFrame, keys: Seq[String], nonKeyCols: Seq[String]): DataFrame = {
-    val b = base.select(keys.map(col) :+ rowHash(nonKeyCols).as("__base_hash"): _*)
-    val h = head.select(keys.map(col) :+ rowHash(nonKeyCols).as("__head_hash"): _*)
+    val b = base.select(keys.map(ident) :+ rowHash(nonKeyCols).as("__base_hash"): _*)
+    val h = head.select(keys.map(ident) :+ rowHash(nonKeyCols).as("__head_hash"): _*)
     h.join(b, keys, "inner").filter(col("__base_hash") =!= col("__head_hash"))
   }
 
@@ -222,10 +284,10 @@ object DiffEngine {
     * per compared column: (column, n_changed), head column order. */
   def changedByColumn(base: DataFrame, head: DataFrame, keys: Seq[String], cols: Seq[String]): DataFrame = {
     require(keys.nonEmpty && cols.nonEmpty, "changedByColumn needs keys and columns")
-    val b = base.select(keys.map(col) ++ cols.map(c => col(c).as(s"__b_$c")): _*)
-    val h = head.select(keys.map(col) ++ cols.map(c => col(c).as(s"__h_$c")): _*)
+    val b = base.select(keys.map(ident) ++ cols.map(c => ident(c).as(s"__b_$c")): _*)
+    val h = head.select(keys.map(ident) ++ cols.map(c => ident(c).as(s"__h_$c")): _*)
     val aggs = cols.map { c =>
-      sum(when(!(col(s"__b_$c") <=> col(s"__h_$c")), 1L).otherwise(0L)).as(c)
+      sum(when(!(ident(s"__b_$c") <=> ident(s"__h_$c")), 1L).otherwise(0L)).as(c)
     }
     val row = h.join(b, keys, "inner").agg(aggs.head, aggs.tail: _*)
     // melt the single stat row to (column, n_changed) in head column order
@@ -551,7 +613,7 @@ object DiffEngine {
     * Returns per-side counts of such rows so callers can warn or fail fast. */
   def nullKeyCounts(base: DataFrame, head: DataFrame, keys: Seq[String]): (Long, Long) = {
     require(keys.nonEmpty, "null-key check needs key columns")
-    val anyNull = keys.map(col(_).isNull).reduce(_ || _)
+    val anyNull = keys.map(ident(_).isNull).reduce(_ || _)
     (base.filter(anyNull).count(), head.filter(anyNull).count())
   }
 
@@ -566,8 +628,8 @@ object DiffEngine {
   def rowDiffFrame(base: DataFrame, head: DataFrame, keys: Seq[String], nonKeyCols: Seq[String]): DataFrame = {
     // With no non-key columns a matched row can never differ: constant hash.
     val hashCol = if (nonKeyCols.isEmpty) md5(lit("")) else rowHash(nonKeyCols)
-    val b = base.select(keys.map(col) :+ hashCol.as("__base_hash"): _*)
-    val h = head.select(keys.map(col) :+ hashCol.as("__head_hash"): _*)
+    val b = base.select(keys.map(ident) :+ hashCol.as("__base_hash"): _*)
+    val h = head.select(keys.map(ident) :+ hashCol.as("__head_hash"): _*)
     h.join(b, keys, "full_outer")
   }
 
@@ -596,13 +658,13 @@ object DiffEngine {
     require(buckets > 0, "salt buckets must be positive")
     val hashCol = if (nonKeyCols.isEmpty) md5(lit("")) else rowHash(nonKeyCols)
     def side(df: DataFrame, n: String, h: String): DataFrame =
-      df.select(keys.map(col) :+ hashCol.as("__h"): _*)
+      df.select(keys.map(ident) :+ hashCol.as("__h"): _*)
         .withColumn("__salt", pmod(xxhash64(col("__h")), lit(buckets.toLong)))
         .withColumn("__h32",
           expr("CAST(conv(substring(__h, 1, 8), 16, 10) AS BIGINT)"))
-        .groupBy((keys :+ "__salt").map(col): _*)
+        .groupBy(keys.map(ident) :+ col("__salt"): _*)
         .agg(count(lit(1)).as("__pn"), sum(col("__h32")).as("__ps"))
-        .groupBy(keys.map(col): _*)
+        .groupBy(keys.map(ident): _*)
         .agg(sum(col("__pn")).cast("long").as(n),
           md5(concat_ws(":", sum(col("__pn")), sum(col("__ps")))).as(h))
     side(head, "__head_n", "__head_hash")
@@ -647,6 +709,8 @@ object DiffEngine {
       // row-exact, `changed` becomes key-level (≡ default under unique keys)
       saltSkewBuckets: Option[Int] = None
   ): DiffResult = {
+    requireKeys(baseIn, "base", keys)
+    requireKeys(headIn, "head", keys)
     val base = where.fold(baseIn)(p => baseIn.filter(expr(p)))
     val head = where.fold(headIn)(p => headIn.filter(expr(p)))
     val mode = if (keys.nonEmpty) "FULL_DIFF" else "STATS_ONLY"
@@ -655,20 +719,24 @@ object DiffEngine {
     // Schema diff — metadata only.
     val sd = schemaDiff(base, head)
 
-    // ONE scan per side: row count + all column profiles in a single
-    // aggregate (the reference's scan-sharing, adapters/postgres.py:71-92,
-    // plus the count query it runs separately — diff_flow.py:133-135).
-    def profileAndCount(df: DataFrame): (Long, Map[String, (Long, Long)]) = {
-      val aggs = count(lit(1)).as("__n") +: profileExprs(sd.common, approxDistinct)
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      val n = row.getLong(0)
-      val prof = sd.common.zipWithIndex.map { case (c, i) =>
-        c -> (row.getLong(2 * i + 1), row.getLong(2 * i + 2))
-      }.toMap
-      (n, prof)
-    }
-    def profiles(rc: RowCounts, baseProf: Map[String, (Long, Long)], headProf: Map[String, (Long, Long)]) =
-      sd.common.map { c =>
+    // Row counts come with the profiles: exact profiles of both sides in
+    // ONE aggregate ([[profileSides]]); approx mode (or no common column to
+    // profile) scans each side once for its count and HLL++ profiles (the
+    // reference's scan-sharing, adapters/postgres.py:71-92, plus the count
+    // query it runs separately — diff_flow.py:133-135).
+    def countsAndProfiles(): (RowCounts, Seq[ColumnProfile]) = {
+      val sides =
+        if (!approxDistinct && sd.common.nonEmpty) profileSides(Seq(base, head), sd.common)
+        else Seq(base, head).map { df =>
+          val aggs = count(lit(1)).as("__n") +: profileExprs(sd.common, approxDistinct)
+          val row = df.agg(aggs.head, aggs.tail: _*).head()
+          row.getLong(0) -> sd.common.zipWithIndex.map { case (c, i) =>
+            c -> (row.getLong(2 * i + 1), row.getLong(2 * i + 2))
+          }.toMap
+        }
+      val Seq((baseCount, baseProf), (headCount, headProf)) = sides
+      val rc = RowCounts(baseCount, headCount)
+      (rc, sd.common.map { c =>
         val (bn, bd) = baseProf(c)
         val (hn, hd) = headProf(c)
         ColumnProfile(
@@ -676,17 +744,16 @@ object DiffEngine {
           SideProfile(bn, bd, pct(bn, rc.base), pct(bd, rc.base)),
           SideProfile(hn, hd, pct(hn, rc.head), pct(hd, rc.head))
         )
-      }
+      })
+    }
 
     // STATS_ONLY: stop before any join (diff_flow.py:177-178). Side counts
-    // need their own action here (one combined scan per side).
+    // need their own action here (the profile pass, or a count per side).
     if (keys.isEmpty) {
       if (!computeProfiles)
         return DiffResult(meta, RowCounts(base.count(), head.count()), sd, Nil, None)
-      val (baseCount, baseProf) = profileAndCount(base)
-      val (headCount, headProf) = profileAndCount(head)
-      val rc = RowCounts(baseCount, headCount)
-      return DiffResult(meta, rc, sd, profiles(rc, baseProf, headProf), None)
+      val (rc, profs) = countsAndProfiles()
+      return DiffResult(meta, rc, sd, profs, None)
     }
 
     // ONE full-outer join answers added + removed + changed + sample + both
@@ -706,7 +773,7 @@ object DiffEngine {
             .map(c -> _)
         }.toMap
         def coerce(df: DataFrame) = widened.foldLeft(df) { case (d, (c, t)) =>
-          d.withColumn(c, col(c).cast(t))
+          d.withColumn(c, ident(c).cast(t))
         }
         (coerce(base), coerce(head))
       }
@@ -745,15 +812,15 @@ object DiffEngine {
           // null-key rows also trip this — and those equally break the
           // hash-count shortcut, so the exact-count fallback is right there too.)
           count(lit(1)).as("join_rows"),
-          countDistinct(struct(keys.map(col): _*)).as("distinct_keys")
+          countDistinct(struct(keys.map(ident): _*)).as("distinct_keys")
         )).head()
       def stat(i: Int): Long = if (stats.isNullAt(i)) 0L else stats.getLong(i)
       val keysNotUnique = stat(5) > stat(6)
       val changedRows = joined.filter(
         col("__base_hash").isNotNull && col("__head_hash").isNotNull &&
           col("__base_hash") =!= col("__head_hash"))
-        .select(keys.map(col): _*)
-      val ordered = if (deterministicSample) changedRows.orderBy(keys.map(col): _*) else changedRows
+        .select(keys.map(ident): _*)
+      val ordered = if (deterministicSample) changedRows.orderBy(keys.map(ident): _*) else changedRows
       val sampleKeys = ordered.limit(sample).collect().toSeq.map { r =>
         keys.map(k => k -> String.valueOf(r.getAs[Any](k))).toMap
       }
@@ -781,10 +848,8 @@ object DiffEngine {
         DiffResult(meta, rc, sd, Nil, Some(rd), byCol)
       }
       else {
-        val (baseCount, baseProf) = profileAndCount(base)
-        val (headCount, headProf) = profileAndCount(head)
-        val rc = RowCounts(baseCount, headCount)
-        DiffResult(meta, rc, sd, profiles(rc, baseProf, headProf), Some(rd), byCol)
+        val (rc, profs) = countsAndProfiles()
+        DiffResult(meta, rc, sd, profs, Some(rd), byCol)
       }
     } finally { joined.unpersist(); () }
   }

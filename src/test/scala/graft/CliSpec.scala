@@ -1075,7 +1075,7 @@ class CliSpec extends SparkTestBase {
     assert(r.rowcounts.base == 402 && r.rowcounts.head == 402)
   }
 
-  private def git(cwd: Path, args: String*): Unit = {
+  private def git(cwd: Path, args: String*): String = {
     val pb = new ProcessBuilder(("git" +: args): _*)
     pb.directory(cwd.toFile)
     pb.environment().put("GIT_AUTHOR_NAME", "t"); pb.environment().put("GIT_AUTHOR_EMAIL", "t@t")
@@ -1084,6 +1084,7 @@ class CliSpec extends SparkTestBase {
     val p = pb.start()
     val out = new String(p.getInputStream.readAllBytes())
     assert(p.waitFor() == 0, s"git ${args.mkString(" ")}: $out")
+    out.trim
   }
 
   test("worktree diff detects schema drift between refs") {
@@ -1124,6 +1125,35 @@ class CliSpec extends SparkTestBase {
     Seq("creating worktrees", "build (base: main)",
       "build (head: feature/drift)", "comparing snapshots")
       .foreach(stage => assert(rich.contains(stage), s"missing staged line: $stage"))
+  }
+
+  test("worktree diff: a head model failing in its snapshot raises its own error and cleans up") {
+    assume(new ProcessBuilder("git", "--version").start().waitFor() == 0, "git unavailable")
+    val repo = Files.createTempDirectory("graft_boom_repo_")
+    val models = repo.resolve("models"); Files.createDirectories(models)
+    val seeds = repo.resolve("seeds"); Files.createDirectories(seeds)
+    Files.writeString(seeds.resolve("customers.csv"), "id,name\n1,Alice\n2,Bob\n3,Chandra\n")
+    git(repo, "init", "-b", "main")
+    // base's snapshot sleeps 1 s a row, so it is still running when head fails
+    Files.writeString(models.resolve("boomdim.sql"), "select id, name from {{ ref('customers') }} " +
+      "where length(reflect('java.lang.Thread', 'sleep', cast(1000 as bigint))) > 0")
+    git(repo, "add", "."); git(repo, "commit", "-m", "base")
+    git(repo, "checkout", "-b", "f")
+    // fails only when the head snapshot write evaluates row 2
+    Files.writeString(models.resolve("boomdim.sql"),
+      "select id, case when id = 2 then raise_error('boom') else name end as name " +
+        "from {{ ref('customers') }}")
+    git(repo, "add", "."); git(repo, "commit", "-m", "head raises")
+    val e = intercept[Exception](Main.runDiff(spark, Main.parseArgs(Seq("diff", "boomdim",
+      "--keys", "id", "--base", "main", "--head", "f",
+      "--project-dir", repo.toString, "--format", "json"))))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+    assert(!chain.exists(t => String.valueOf(t.getMessage).toLowerCase.contains("cancel")), e)
+    assert(git(repo, "worktree", "list").linesIterator.size == 1)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.contains("boomdim") && (n.endsWith("__base") || n.endsWith("__head")))
+    assert(left.isEmpty, left.mkString(", "))
   }
 
   test("--build-mode dbt: macro model builds via external dbt + manifest alias resolution") {

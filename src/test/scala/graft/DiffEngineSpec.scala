@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.DiffEngine
@@ -158,6 +159,63 @@ class DiffEngineSpec extends SparkTestBase {
     assert(s1.sampleChangedKeys == s0.sampleChangedKeys && !s1.keysNotUnique)
   }
 
+  test("quoted identifiers: dotted and spaced column names diff like plain names") {
+    val plainBase = Seq((1L, "Alice", 10), (2L, "Bob", 20), (3L, "Chandra", 30))
+      .toDF("order_id", "first_name", "qty")
+    val plainHead = Seq((1L, "Alice", 10), (2L, "Robert", 20), (4L, "Deepak", 40))
+      .toDF("order_id", "first_name", "qty")
+    def quoted(df: DataFrame) =
+      df.withColumnRenamed("order_id", "order id").withColumnRenamed("first_name", "first.name")
+    val back = Map("order id" -> "order_id", "first.name" -> "first_name")
+    def plainNames(r: graft.model.DiffResult) = (
+      r.rowcounts,
+      r.rowDiff.map(d => (d.added, d.removed, d.changed, d.keysNotUnique,
+        d.sampleChangedKeys.map(_.map { case (k, v) => back.getOrElse(k, k) -> v }))),
+      r.columnProfiles.map(p => p.copy(column = back.getOrElse(p.column, p.column))),
+      r.changedByColumn.map(_.map { case (c, n) => back.getOrElse(c, c) -> n }))
+    def both(f: (DataFrame, DataFrame, String) => graft.model.DiffResult) = {
+      val p = plainNames(f(plainBase, plainHead, "order_id"))
+      assert(plainNames(f(quoted(plainBase), quoted(plainHead), "order id")) == p)
+      p
+    }
+    val keyed = both((b, h, k) => DiffEngine.diff(b, h, keys = Seq(k), computeByColumn = true))
+    assert(keyed._2.exists(d => (d._1, d._2, d._3) == ((1L, 1L, 1L))))
+    both((b, h, k) => DiffEngine.diff(b, h, keys = Seq(k), saltSkewBuckets = Some(4)))
+    both((b, h, k) => DiffEngine.diff(b, h, keys = Seq(k), approxDistinct = true))
+    both((b, h, _) => DiffEngine.diff(b, h))
+    assert(DiffEngine.nullKeyCounts(quoted(plainBase), quoted(plainHead), Seq("order id")) == ((0L, 0L)))
+  }
+
+  test("library diff: a key missing from one side fails naming the side, before any job") {
+    // job starts by job group; the bus delivers in order, so once a later
+    // sentinel job's start arrives, every job the diff started has too
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val renamed = customers.withColumnRenamed("customer_id", "cust_id")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (eHead, eBase) = try {
+      sc.setJobGroup("graft_lib_badkey", "bad key")
+      (intercept[IllegalArgumentException](DiffEngine.diff(customers, renamed, keys = Seq("customer_id"))),
+        intercept[IllegalArgumentException](DiffEngine.diff(renamed, customers, keys = Seq("customer_id"))))
+    } finally {
+      sc.setJobGroup("graft_lib_badkey_sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime + 30000000000L
+      while (!groups.contains("graft_lib_badkey_sentinel") && System.nanoTime < deadline) Thread.sleep(10)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(eHead.getMessage.contains("'customer_id' is not in the head side"), eHead.getMessage)
+    assert(eHead.getMessage.contains("nearest columns: cust_id, name"), eHead.getMessage)
+    assert(eBase.getMessage.contains("'customer_id' is not in the base side"), eBase.getMessage)
+    assert(groups.contains("graft_lib_badkey_sentinel"))
+    assert(!groups.contains("graft_lib_badkey"), "a Spark job ran before the key check")
+  }
+
   test("null-key diagnostic counts rows that can never match") {
     val base = Seq((Some(1), "a"), (None, "b"), (Some(3), "c")).toDF("k", "v")
     val head = Seq((Some(1), "a"), (None, "x"), (None, "y")).toDF("k", "v")
@@ -171,6 +229,32 @@ class DiffEngineSpec extends SparkTestBase {
     val melt = DiffEngine.profileMeltDf(df, cols).head()
     assert(direct.toSeq == melt.toSeq)
     assert(direct.schema.fieldNames.sameElements(melt.schema.fieldNames))
+    // the two-side pass equals columnProfile on each side, type by type:
+    // -0.0/0.0 and NaN/NaN are one value each, NULLs count as nulls only,
+    // an int column that drifted to bigint counts each side in its own
+    // type, and nested values compare whole
+    val side = Seq(
+      (1, Some(-0.0), Some(BigDecimal("1.50")), Some("2024-01-01"), Some("2024-01-01 10:00:00"),
+        Some("a"), Some(Seq(1, 2)), Some((1, "x"))),
+      (2, Some(0.0), Some(BigDecimal("1.5")), Some("2024-01-02"), Some("2024-01-01 10:00:00"),
+        None, Some(Seq(2, 1)), Some((1, "x"))),
+      (3, Some(Double.NaN), Some(BigDecimal("2")), Some("2024-01-01"), Some("2024-01-02 00:00:00"),
+        Some("a"), Some(Seq.empty[Int]), Some((2, null: String))),
+      (4, Some(Double.NaN), None, None, None, Some("b"), None, None),
+      (4, None, Some(BigDecimal("2.00")), Some("2024-01-03"), None,
+        None, Some(Seq(1, 2)), Some((2, null: String)))
+    ).toDF("n", "d", "dec", "dt", "ts", "s", "arr", "st")
+      .withColumn("dt", to_date(col("dt"))).withColumn("ts", to_timestamp(col("ts")))
+    val sideCols = side.columns.toSeq
+    val head = side.filter(col("n") =!= 2).withColumn("n", col("n").cast("long"))
+    def expected(df: DataFrame) = (df.count(), DiffEngine.columnProfile(df, sideCols))
+    val both = DiffEngine.profileSides(Seq(side, head), sideCols)
+    assert(both == Seq(expected(side), expected(head)))
+    assert(both.head._2("d") == ((1L, 2L)) && both.head._2("arr") == ((1L, 3L)))
+    val emptyHead = head.filter(lit(false))
+    assert(DiffEngine.profileSides(Seq(side, emptyHead), sideCols) ==
+      Seq(expected(side), (0L, sideCols.map(_ -> ((0L, 0L))).toMap)))
+    assert(expected(emptyHead)._2.values.forall(_ == ((0L, 0L))))
   }
 
   test("bucketed snapshots make the diff join exchange-free") {
@@ -188,6 +272,24 @@ class DiffEngineSpec extends SparkTestBase {
       // and the result is still correct
       val removed = joined.filter(col("__head_hash").isNull).count()
       assert(removed == orders.filter(col("o_orderkey") % 7 === 0).count())
+      // the keyed diff's exact profiles: both sides' scans union under ONE
+      // aggregate and no Expand is planned — the per-column count(distinct)
+      // form it replaces plans one
+      import org.apache.spark.sql.execution.{ExpandExec, SparkPlan, UnionExec}
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+      def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      val cols = Seq("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
+      val prof = physical(DiffEngine.profileSidesDf(Seq(base, head), cols))
+      assert(prof.collect { case e: ExpandExec => e }.isEmpty, s"Expand in the profile plan:\n$prof")
+      val unions = prof.collect { case u: UnionExec => u }
+      assert(unions.size == 1 && unions.head.children.size == 2, s"expected one two-side union:\n$prof")
+      assert(unions.head.collect { case a: BaseAggregateExec => a }.isEmpty,
+        s"a side aggregates before the union:\n$prof")
+      assert(physical(DiffEngine.profileDf(base, cols)).collect { case e: ExpandExec => e }.nonEmpty)
     } finally { store.dropTable("b"); store.dropTable("h"); store.drop() }
   }
 
